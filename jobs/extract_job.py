@@ -203,23 +203,26 @@ def main(argv: list[str] | None = None) -> int:
         done = []
     if done:
         sharded = sharded.filter(~F.col("shard").isin(done))
+    # A shard whose residue class is empty still gets its manifest row
+    # (it IS done) — enumerate the todo residues, don't derive from data.
+    todo = sorted(set(range(args.shards)) - set(int(s) for s in done))
     observed, obs = telemetry.observe_extraction(sharded)
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     (
-        # repartition("shard") clusters each shard into one task → one
-        # file per shard dir (not tasks × shards small files); dynamic
+        # repartition(n, "shard") clusters each shard into one task →
+        # one file per shard dir (not tasks × shards small files); the
+        # explicit count keeps AQE from coalescing the write into ONE
+        # task that writes every shard file serially. Dynamic
         # overwrite replaces exactly the shards in the frame, making a
         # shard re-run idempotent under ANY committer
-        observed.repartition("shard")
+        observed.repartition(max(1, min(len(todo), parts)), "shard")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("shard")
         .parquet(args.output)
     )
     # manifest append AFTER the data commit: a crash before this line
-    # leaves the shards unrecorded and the next run rewrites them. A
-    # shard whose residue class is empty still gets its row (it IS
-    # done) — enumerate the todo residues, don't derive from data.
-    todo = sorted(set(range(args.shards)) - set(int(s) for s in done))
+    # leaves the shards unrecorded and the next run rewrites them
     if todo:
         spark.createDataFrame(
             [(int(s),) for s in todo], "shard int"

@@ -19,4 +19,8 @@ Design rules (see SURVEY.md):
     stable ``(key, idx)`` orderings.
 """
 
+from pero_ocr_spark import zipimport_cache as _zipimport_cache
+
+_zipimport_cache.install()
+
 __version__ = "0.1.0"

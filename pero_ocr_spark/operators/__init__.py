@@ -41,9 +41,12 @@ def grouped_map_in_pandas(df: DataFrame, key: str, per_group, schema):
     Semantics match applyInPandas: ``per_group`` is called exactly
     once per distinct key with all of that key's rows (hash
     partitioning puts a key in one partition; the sort makes it one
-    contiguous run). Row order WITHIN a group is not guaranteed by
-    either form; group functions must not depend on it (none here do
-    — they sort internally or compute order-independent outputs).
+    contiguous run), as a frame with a fresh ``RangeIndex`` — so
+    label-based access (``pdf["v"][0]``, ``.loc[0]``) works as under
+    applyInPandas instead of seeing a slice's inherited labels. Row
+    order WITHIN a group is not guaranteed by either form; group
+    functions must not depend on it (none here do — they sort
+    internally or compute order-independent outputs).
     """
     import numpy as np
     import pandas as pd
@@ -66,9 +69,7 @@ def grouped_map_in_pandas(df: DataFrame, key: str, per_group, schema):
         parts: list = []
 
         def close_run():
-            g = parts[0] if len(parts) == 1 else pd.concat(
-                parts, ignore_index=True
-            )
+            g = pd.concat(parts, ignore_index=True)
             parts.clear()
             return per_group(g)
 
@@ -97,7 +98,7 @@ def grouped_map_in_pandas(df: DataFrame, key: str, per_group, schema):
             for _, g in pdf.iloc[:cut].groupby(
                 keys, sort=False, dropna=False
             ):
-                outs.append(per_group(g))
+                outs.append(per_group(g.reset_index(drop=True)))
             # one output Arrow batch per input batch, not per group
             if outs:
                 yield outs[0] if len(outs) == 1 else pd.concat(

@@ -1063,6 +1063,18 @@ def _cdc_doc_kernel(
     return clen, chash
 
 
+def _grow_pows31(pows: "np.ndarray", need: int) -> "np.ndarray":
+    """Extend the 31^e mod p table ``pows`` (``pows[0] == 1``) to at
+    least ``need`` entries by doubling: the next block is the table's
+    head times 31^len mod p, so growth costs O(need) vectorized work
+    and a product of two residues (< 2^62) never overflows int64."""
+    while len(pows) < need:
+        step = int(pows[-1]) * 31 % HASH_P  # 31^len(pows)
+        head = pows[: need - len(pows)]
+        pows = np.concatenate((pows, head * step % HASH_P))
+    return pows
+
+
 def _cdc_stream(docs: DataFrame, k: int, mask: int) -> DataFrame:
     """(doc_id, clen, chash) — one row per CDC chunk, computed in the
     vectorized Arrow kernel (:func:`_cdc_doc_kernel`): the per-window
@@ -1077,17 +1089,13 @@ def _cdc_stream(docs: DataFrame, k: int, mask: int) -> DataFrame:
     id_type = docs.schema["doc_id"].dataType.simpleString()
 
     def gen(batches):
-        pows = [1]
-        pows_np = np.array(pows, dtype=np.int64)
+        pows = np.ones(1, dtype=np.int64)
         for pdf in batches:
             need = max((len(t) for t in pdf["text"] if t), default=0) + 1
-            if need > len(pows):
-                while len(pows) < need:
-                    pows.append(pows[-1] * 31 % HASH_P)
-                pows_np = np.array(pows, dtype=np.int64)
+            pows = _grow_pows31(pows, need)
             ids, lens, hashes = [], [], []
             for did, text in zip(pdf["doc_id"], pdf["text"]):
-                clen, chash = _cdc_doc_kernel(text, k, mask, pows_np)
+                clen, chash = _cdc_doc_kernel(text, k, mask, pows)
                 ids.extend([did] * len(clen))
                 lens.append(clen)
                 hashes.append(chash)

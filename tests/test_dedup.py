@@ -392,13 +392,28 @@ class TestCdcKernelEquivalence:
         rows.append((901, "short"))       # shorter than the window
         rows.append((902, "a" * 500))     # long repetitive run
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        # k = 10 exercises the mod-per-step Horner fallback (the direct
-        # sliding-window dot would overflow int64 past k = 9)
-        for (k, mask) in ((8, 32), (4, 8), (10, 16)):
-            new = sorted(
-                map(tuple, dedup._cdc_stream(docs, k, mask).collect())
+        # 4-row Arrow batches: the longest document (902) is created
+        # last, so it reaches the kernel in a later batch than shorter
+        # ones and the 31^e power table grows mid-stream
+        old_batch = spark.conf.get(
+            "spark.sql.execution.arrow.maxRecordsPerBatch"
+        )
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
+        try:
+            # k = 10 exercises the mod-per-step Horner fallback (the
+            # direct sliding-window dot would overflow int64 past k = 9)
+            for (k, mask) in ((8, 32), (4, 8), (10, 16)):
+                new = sorted(
+                    map(tuple, dedup._cdc_stream(docs, k, mask).collect())
+                )
+                old = sorted(
+                    map(
+                        tuple,
+                        dedup._cdc_stream_catalyst(docs, k, mask).collect(),
+                    )
+                )
+                assert new == old
+        finally:
+            spark.conf.set(
+                "spark.sql.execution.arrow.maxRecordsPerBatch", old_batch
             )
-            old = sorted(
-                map(tuple, dedup._cdc_stream_catalyst(docs, k, mask).collect())
-            )
-            assert new == old

@@ -28,6 +28,9 @@ def test_extract_job_writes_sharded_spans(spark, sf_dir, tmp_path, capsys):
     df = spark.read.parquet(str(out))
     assert df.count() == m["n_spans"]
     assert df.select("shard").distinct().count() == 4
+    # one task per shard: each shard dir holds exactly one data file
+    for s in range(4):
+        assert len(list((out / f"shard={s}").glob("*.parquet"))) == 1
 
 
 def test_ingest_job_emits_interleaved_spans(spark, sf_dir, tmp_path, capsys):

@@ -94,3 +94,31 @@ class TestGroupedMapInPandas:
             spark, df, ["doc_id", "region_id"], fn,
             "doc_id long, region_id string, n long, s long",
         )
+
+    def test_label_based_group_access(self, spark):
+        # applyInPandas hands every group a fresh RangeIndex, so
+        # pdf["v"][0] is the group's first row; the helper's batch
+        # slices and groupby sub-frames must not leak their labels
+        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+            return pd.DataFrame(
+                {
+                    "doc_id": [pdf["doc_id"][0]],
+                    "n": [len(pdf)],
+                    "s": [int(pdf["v"][0])],
+                }
+            )
+
+        old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "30")
+        try:
+            # v is constant per group: the first row is order-independent
+            # and groups smaller than a batch reach the groupby path
+            rows = [(i % 40, (i % 40) * 10) for i in range(400)]
+            df = spark.createDataFrame(rows, "doc_id long, v long")
+            self._compare(
+                spark, df, "doc_id", fn, "doc_id long, n long, s long",
+            )
+        finally:
+            spark.conf.set(
+                "spark.sql.execution.arrow.maxRecordsPerBatch", old
+            )
